@@ -85,7 +85,7 @@ def q_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("key"),
         synth.cell_from_key(F.col("o_orderkey"), 12).alias("cell"),
     )
-    return jx.contains_indexed(probes, region).select("key", "contained")
+    return jx.contains(probes, region).select("key", "contained")
 
 
 def q_get_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -102,7 +102,7 @@ def q_get_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("key"),
         synth.cell_from_key(F.col("o_orderkey"), 12).alias("cell"),
     )
-    return jx.get_indexed(probes, region).select("key", "stored_cell", "supp")
+    return jx.get_auto(probes, region).select("key", "stored_cell", "supp")
 
 
 def q_region_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

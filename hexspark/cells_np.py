@@ -1,9 +1,11 @@
 """Vectorized numpy twins of :mod:`hexspark.cells`.
 
-Used inside Arrow-batched pandas UDFs (``mapInPandas`` /
-``applyInPandas``) and for driver-side compaction of broadcast-scale
-region tables.  All functions operate on ``int64`` arrays (valid cells
-are non-negative, see :mod:`hexspark.constants`) and are element-wise
+Used inside the compaction ``applyInPandas`` groups and for
+driver-side work on broadcast-scale region tables (compaction, disk
+tree layout, grid-disk neighbours).  The containment join does not use
+them: it runs in the JVM on :mod:`hexspark.cells` Column expressions.
+All functions operate on ``int64`` arrays (valid cells are
+non-negative, see :mod:`hexspark.constants`) and are element-wise
 equivalents of the reference bit math
 (/root/reference/src/cell.rs:28-226).
 """
@@ -79,48 +81,3 @@ def make_cell(base, r, digits) -> np.ndarray:
         | digits
     )
 
-
-class SortedCellIndex:
-    """A compacted cell set/map flattened into sorted numpy arrays.
-
-    This is the broadcast-side data structure for the production
-    containment join: compacted leaves are pairwise non-related, so
-    their (lo, hi) ranges are disjoint and sorted by ``lo``; a probe's
-    covering leaf — if any — is the unique candidate at
-    ``searchsorted(lo, lo15(probe), 'right') - 1``.  This replaces the
-    reference's pointer-tree descent
-    (/root/reference/src/node.rs:83-111) with one binary search per
-    probe, vectorized across each Arrow batch.
-    """
-
-    __slots__ = ("cells", "los", "his", "order")
-
-    def __init__(self, cells: np.ndarray):
-        cells = np.asarray(cells, dtype=np.int64)
-        l = lo(cells)
-        order = np.argsort(l, kind="stable")
-        self.cells = cells[order]
-        self.los = l[order]
-        self.his = hi(cells)[order]
-        self.order = order  # original positions, for value-array alignment
-
-    def __len__(self) -> int:
-        return len(self.cells)
-
-    def probe(self, probe_cells: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Return (covered_mask, stored_idx) for each probe.
-
-        ``stored_idx`` indexes into the *sorted* arrays (use
-        ``self.order`` to map back to caller value arrays); -1 where not
-        covered.  Implements the ancestor-hit rule: a probe is covered
-        iff some stored leaf's range contains the probe's full range —
-        which also makes coarse probes miss, exactly like digits
-        running out at a Parent node (/root/reference/src/node.rs:93-96).
-        """
-        probe_cells = np.asarray(probe_cells, dtype=np.int64)
-        plo = lo(probe_cells)
-        phi = hi(probe_cells)
-        idx = np.searchsorted(self.los, plo, side="right") - 1
-        safe = np.maximum(idx, 0)
-        covered = (idx >= 0) & (self.los[safe] <= plo) & (self.his[safe] >= phi)
-        return covered, np.where(covered, idx, -1)

@@ -14,48 +14,37 @@ against a broadcast compacted region table.  Semantics preserved exactly:
   (/root/reference/src/hex_tree_map.rs:244-261,
   /root/reference/src/disktree/mod.rs:226-230).
 
-Two physical forms:
+The nearest-ancestor lookup has two physical forms, both plain
+broadcast hash joins that run entirely in the JVM (no Python worker on
+the probe side):
 
-1. ``*_explode`` — pure-DataFrame rewrite: explode each probe into its
-   ≤16 ancestors and broadcast equi-join on the stored cell.  Fully
-   declarative (Catalyst plans a BroadcastHashJoin), used as the
-   SQL-expressible oracle form.  Costs a ≤16× transient row blowup.
-2. ``*_indexed`` — production form: ``mapInArrow`` over the probe
-   table with a broadcast :class:`hexspark.cells_np.SortedCellIndex`;
-   one vectorized ``searchsorted`` per raw Arrow RecordBatch (a
-   ``mapInPandas`` twin is kept for comparison — the pandas
-   materialization costs ~20%).  No row blowup, no shuffle, O(log n)
-   per probe — the direct analogue of the reference's O(res) descent,
-   but batched.  Values of arbitrary Spark
-   type are attached afterwards by a *tiny* broadcast join on the
-   stored cell key, so the hot path stays numeric.
+1. :func:`get_chained` — one broadcast equi-join per resolution the
+   region stores, on ``to_parent(probe, r)``, results coalesced.  No
+   row blowup, naturally left-joinable.  Serves every left lookup and
+   inner lookups on maps of at most ``MAX_CHAINED_RES`` levels.
+2. :func:`get_explode` — ``stack`` each probe into its ancestors at
+   the region's resolutions and do a single broadcast equi-join on the
+   stored cell.  Inner-only; serves inner lookups on deeper maps, where
+   one join over a k× row blowup beats k chained joins.
+
+:func:`get_auto` picks between them and :func:`contains` is a left
+lookup reduced to a boolean.  Invalid probes (reserved bit set, mode
+!= 1, base >= 122) never match: ``to_parent`` keeps those bits, so no
+ancestor of an invalid probe equals a valid stored cell.
 """
 
 from __future__ import annotations
 
 from typing import Optional
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField
 
 from . import cells as cx
-from . import cells_np as cnp
-from . import constants as K
 
-
-# ---------------------------------------------------------------------------
-# ancestor-explode form (declarative / oracle)
-# ---------------------------------------------------------------------------
-
-def ancestors_array(cell_col: str, res_list: Optional[list[int]] = None) -> F.Column:
-    """Array of ``to_parent(cell, r)`` for r in ``res_list`` (default all
-    0..15).  Passing the region table's actual resolution set shrinks
-    the explode factor from 16× to typically 3-4×."""
-    rs = range(K.MAX_RES + 1) if res_list is None else sorted(res_list)
-    return F.array_compact(F.array(*[cx.to_parent(cell_col, r) for r in rs]))
+# Inner lookups on maps with more resolution levels than this use the
+# explode form; fewer levels (and every left lookup) use chained joins.
+MAX_CHAINED_RES = 6
 
 
 _RES_SET_MEMO: dict[tuple, list[int]] = {}
@@ -113,42 +102,6 @@ def region_res_set(region: DataFrame, region_col: str = "cell") -> list[int]:
     return rs
 
 
-def contains_explode(
-    probes: DataFrame,
-    region: DataFrame,
-    probe_col: str = "cell",
-    region_col: str = "cell",
-    out_col: str = "contained",
-    res_list: Optional[list[int]] = None,
-) -> DataFrame:
-    """Mark each probe row contained/not via explode + broadcast
-    semi-join.  Explodes only at the region's actual resolutions
-    (derived via ``region_res_set`` unless passed) — a 3-4× transient
-    row factor instead of the full 16."""
-    rs = res_list if res_list is not None else region_res_set(region, region_col)
-    if not rs:  # empty region: nothing is contained
-        return probes.withColumn(out_col, F.lit(False))
-    anc = probes.select(
-        F.col(probe_col).alias("__q"),
-        F.explode(ancestors_array(probe_col, rs)).alias("__a"),
-    )
-    hits = (
-        anc.join(
-            F.broadcast(region.select(F.col(region_col).alias("__a"))),
-            on="__a",
-            how="leftsemi",
-        )
-        .select(F.col("__q"))
-        .distinct()
-        .withColumn(out_col, F.lit(True))
-    )
-    return (
-        probes.join(hits, probes[probe_col] == hits["__q"], "left")
-        .drop("__q")
-        .withColumn(out_col, F.coalesce(F.col(out_col), F.lit(False)))
-    )
-
-
 def get_explode(
     probes: DataFrame,
     region: DataFrame,
@@ -175,10 +128,10 @@ def get_explode(
 
     Only ``how='inner'`` is supported — a left lookup over an exploded
     probe would need a probe-wide re-collapse shuffle; use
-    :func:`get_indexed` (naturally left) when unmatched rows matter.
+    :func:`get_chained` (naturally left) when unmatched rows matter.
     """
     if how != "inner":
-        raise NotImplementedError("explode form is inner-only; use get_indexed")
+        raise NotImplementedError("explode form is inner-only; use get_chained")
     rs = res_list if res_list is not None else region_res_set(region, region_col)
     if not rs:
         rs = [0]  # empty region: the join below matches nothing anyway
@@ -260,149 +213,47 @@ def get_auto(
     probe_col: str = "cell",
     region_col: str = "cell",
     how: str = "inner",
-    max_explode: int = 6,
 ) -> DataFrame:
     """Physical-form chooser for the nearest-ancestor lookup.
 
-    Measured on 100M probes (local[8] / local[32]): chained broadcast
-    joins 4.0s/2.5s, explode+join 23.1s/9.2s (per-row array allocation
-    churns the allocator and caps multi-core scaling), mapInPandas
-    searchsorted ~25s pandas-form, ~20% faster as mapInArrow (Python-side ceiling).  So: chained joins when
-    the region's resolution set is small (the common case — compacted
-    continent regions span 3-5 levels); searchsorted for deep res sets
-    where 16 chained joins would bloat the plan."""
+    Inner lookups on a region spanning more than ``MAX_CHAINED_RES``
+    resolutions use the explode form; everything else (shallow maps,
+    every left lookup) uses chained joins.  Measured on a 4-core box at
+    local[4], ``ops.region_counts``, median of warm runs:
+
+    =====================  ==========  =======  =======
+    region map             probes      chained  explode
+    =====================  ==========  =======  =======
+    US915, 8 levels        100k res12  1.17 s   0.80 s
+    US915, 8 levels        4M          1.34 s   1.79 s
+    region_map, 3 levels   4M          0.92 s   1.48 s
+    synthetic, 15 levels   4M res15    22.2 s   1.61 s
+    =====================  ==========  =======  =======
+
+    Chained cost grows with the number of levels (one join each), so
+    the explode form takes over on deep maps.  A left lookup on a deep
+    map stays chained (explode cannot keep unmatched rows without a
+    re-collapse shuffle) and pays that growth: ~1.4 s at 8 levels but
+    ~7 s at 12-15 levels per 1M probes."""
     rs = region_res_set(region, region_col)
-    if 0 < len(rs) <= max_explode:
-        return get_chained(probes, region, probe_col, region_col, how, rs)
-    return get_indexed(probes, region, probe_col, region_col, how)
+    if how == "inner" and len(rs) > MAX_CHAINED_RES:
+        return get_explode(probes, region, probe_col, region_col, how, rs)
+    return get_chained(probes, region, probe_col, region_col, how, rs)
 
 
-# ---------------------------------------------------------------------------
-# indexed form (production)
-# ---------------------------------------------------------------------------
-
-def _probe_kernel(qi: "np.ndarray", los, his, cells_sorted):
-    """Vectorized nearest-ancestor search: (covered mask, stored cells)."""
-    if len(los) == 0:  # empty region: nothing is covered
-        return np.zeros(len(qi), dtype=bool), np.zeros(len(qi), dtype=np.int64)
-    valid = cnp.is_valid(qi)
-    plo = cnp.lo(qi)
-    phi = cnp.hi(qi)
-    idx = np.searchsorted(los, plo, side="right") - 1
-    safe = np.maximum(idx, 0)
-    covered = valid & (idx >= 0) & (los[safe] <= plo) & (his[safe] >= phi)
-    stored = np.where(covered, cells_sorted[safe], 0)
-    return covered, stored
-
-
-def probe_indexed(
-    probes: DataFrame,
-    region: DataFrame,
-    probe_col: str = "cell",
-    region_col: str = "cell",
-    stored_col: str = "stored_cell",
-    form: str = "arrow",
-) -> DataFrame:
-    """Attach ``stored_cell`` (nullable) to every probe row via a
-    broadcast sorted-array binary search inside an Arrow-batched UDF.
-
-    The region's compacted cells are collected once (broadcast-scale by
-    construction — see :mod:`hexspark.build`), sorted by ``lo``, and
-    shipped to executors as numpy arrays.  NULL probe cells and probes
-    with no covering leaf get NULL ``stored_cell``.
-
-    ``form='arrow'`` (default) runs the kernel over raw
-    ``pyarrow.RecordBatch`` es (``mapInArrow``) — no pandas DataFrame
-    materialization per batch; ``form='pandas'`` is the ``mapInPandas``
-    twin (kept for comparison/regression)."""
-    cells = np.array(
-        [r[0] for r in region.select(region_col).collect()], dtype=np.int64
-    )
-    index = cnp.SortedCellIndex(cells)
-    sc = probes.sparkSession.sparkContext
-    bidx = sc.broadcast({"cells": index.cells, "los": index.los, "his": index.his})
-
-    # NULL probes become a (guaranteed-invalid) -1 sentinel so every Arrow
-    # batch arrives as plain int64 — nullable longs would otherwise decay
-    # to float64 and corrupt >2^53 cell values.
-    qcol = "__qcell"
-    src = probes.withColumn(qcol, F.coalesce(F.col(probe_col), F.lit(-1).cast("long")))
-    # note: StructType.add mutates in place — never call it on a cached
-    # df.schema; build a fresh StructType instead
-    from pyspark.sql.types import StructType
-
-    schema = StructType(
-        list(probes.schema.fields) + [StructField(stored_col, LongType(), True)]
-    )
-
-    if form == "arrow":
-        import pyarrow as pa
-
-        out_names = [f.name for f in probes.schema.fields] + [stored_col]
-        n_keep = len(probes.schema.fields)  # qcol is appended last
-
-        def afn(batches):
-            d = bidx.value
-            los, his, cells_sorted = d["los"], d["his"], d["cells"]
-            for batch in batches:
-                qi = batch.column(n_keep).to_numpy(zero_copy_only=False)
-                qi = np.ascontiguousarray(qi, dtype=np.int64)
-                covered, stored = _probe_kernel(qi, los, his, cells_sorted)
-                stored_arr = pa.array(stored, type=pa.int64(), mask=~covered)
-                cols = [batch.column(i) for i in range(n_keep)] + [stored_arr]
-                yield pa.RecordBatch.from_arrays(cols, names=out_names)
-
-        return src.mapInArrow(afn, schema=schema)
-
-    def fn(batches):
-        d = bidx.value
-        los, his, cells_sorted = d["los"], d["his"], d["cells"]
-        for pdf in batches:
-            qi = pdf[qcol].to_numpy(dtype=np.int64)
-            covered, stored = _probe_kernel(qi, los, his, cells_sorted)
-            out = pdf.drop(columns=[qcol])
-            out[stored_col] = pd.array(stored, dtype="Int64")
-            out.loc[~covered, stored_col] = pd.NA
-            yield out
-
-    return src.mapInPandas(fn, schema=schema)
-
-
-def contains_indexed(
+def contains(
     probes: DataFrame,
     region: DataFrame,
     probe_col: str = "cell",
     region_col: str = "cell",
     out_col: str = "contained",
 ) -> DataFrame:
-    out = probe_indexed(probes, region, probe_col, region_col, "__stored")
-    return out.withColumn(out_col, F.col("__stored").isNotNull()).drop("__stored")
-
-
-def get_indexed(
-    probes: DataFrame,
-    region: DataFrame,
-    probe_col: str = "cell",
-    region_col: str = "cell",
-    how: str = "inner",
-) -> DataFrame:
-    """Nearest-ancestor lookup, production form.
-
-    Heavy path is the vectorized search; the (possibly wide /
-    arbitrary-typed) region values are attached by a broadcast hash
-    join on the long ``stored_cell`` key — Catalyst broadcasts the tiny
-    side, the 10^12-row probe side never shuffles.
-    """
-    probed = probe_indexed(probes, region, probe_col, region_col, "stored_cell")
-    if how == "inner":
-        probed = probed.filter(F.col("stored_cell").isNotNull())
-    region_vals = region.withColumnRenamed(region_col, "__rc")
-    joined = probed.join(
-        F.broadcast(region_vals),
-        probed["stored_cell"] == region_vals["__rc"],
-        how="inner" if how == "inner" else "left",
-    ).drop("__rc")
-    return joined
+    """Mark each probe row contained (some stored leaf is its
+    ancestor-or-self) or not: a left chained lookup on the region's
+    cells, reduced to ``stored_cell IS NOT NULL``.  NULL and invalid
+    probes come out ``False``."""
+    out = get_chained(probes, region.select(region_col), probe_col, region_col, "left")
+    return out.withColumn(out_col, F.col("stored_cell").isNotNull()).drop("stored_cell")
 
 
 # ---------------------------------------------------------------------------

@@ -57,12 +57,13 @@ def assign_regions(
 ) -> DataFrame:
     """Attach (stored_cell, region) to each page by nearest-ancestor
     containment — the flagship spatial join.  ``form``: 'auto' picks
-    codegen explode vs searchsorted by region res-set (see
-    join.get_auto); 'indexed'/'explode' force a path."""
+    chained joins vs explode by region res-set and ``how`` (see
+    join.get_auto); 'chained'/'explode' force a path.  'indexed' is an
+    alias of 'auto', kept for callers that still pass the old name."""
     fn = {
         "auto": jx.get_auto,
+        "indexed": jx.get_auto,
         "chained": jx.get_chained,
-        "indexed": jx.get_indexed,
         "explode": jx.get_explode,
     }[form]
     return fn(pages, regions, probe_col="cell", region_col="cell", how=how)
@@ -73,10 +74,9 @@ def region_counts(
 ) -> DataFrame:
     """Pages per region — the headline throughput query.
 
-    Pages are projected to (cell, lang) *before* the join: Catalyst
-    cannot prune columns through ``mapInPandas`` (the UDF signature
-    pins the schema), so we prune manually — at 10^12 rows this keeps
-    url/html/text bytes out of the Arrow channel entirely."""
+    Pages are projected to (cell, lang) *before* the join so the
+    explode form's ``stack`` rows and the chained joins carry only the
+    two columns the aggregate reads."""
     slim = pages.select("cell", "lang")
     assigned = assign_regions(slim, regions, how="inner", form=form)
     return assigned.groupBy("region").agg(

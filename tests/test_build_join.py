@@ -38,15 +38,15 @@ def monaco(spark, fixture_paths):
 
 
 def naive_contains(region_cells: np.ndarray, target: int) -> bool:
-    """Linear-scan oracle, port of tests.rs:6-23 semantics."""
+    """Linear-scan oracle, port of tests.rs:6-23 semantics: some stored
+    cell no finer than the target equals the target promoted to that
+    cell's resolution (the scan is vectorized over the stored cells)."""
     t = np.int64(target)
     tres = int(cnp.res(np.array([t]))[0])
-    for c in region_cells:
-        cres = int(cnp.res(np.array([c]))[0])
-        if cres <= tres:
-            if cnp.to_parent(np.array([t]), cres)[0] == c:
-                return True
-    return False
+    cres = cnp.res(region_cells)
+    keep = cres <= tres
+    promoted = cnp.to_parent(np.full(int(keep.sum()), t), cres[keep])
+    return bool((promoted == region_cells[keep]).any())
 
 
 def descendant_probe(cell: int, res: int) -> int:
@@ -74,12 +74,12 @@ def test_us915_len_precompacted(spark, us915):
 def test_us915_every_cell_gets_itself(spark, us915):
     # tests.rs:55-57: get(cell).0 == cell for every stored cell
     built = bx.build_region(us915, compactor="set").cache()
-    got = jx.get_indexed(
+    got = jx.get_chained(
         us915.select(F.col("cell").alias("probe")), built, probe_col="probe"
     )
     n_match = got.filter(F.col("stored_cell") == F.col("probe")).count()
     assert n_match == 42383
-    # same via the explode form
+    # same via the explode form (get_auto's pick for this 8-level map)
     got2 = jx.get_explode(
         us915.select(F.col("cell").alias("probe")), built, probe_col="probe"
     )
@@ -117,15 +117,10 @@ def test_us915_probe_semantics(spark, us915):
         assert naive_contains(cells, p) == e, hex(p)
 
     pdf = spark.createDataFrame([(int(p),) for p in probes], "probe: long")
-    for form in (jx.contains_indexed, jx.contains_explode):
-        got = (
-            form(pdf, built, probe_col="probe")
-            .orderBy("probe")
-            .collect()
-        )
-        by_probe = {row["probe"]: row["contained"] for row in got}
-        for p, e in zip(probes, expected):
-            assert by_probe[p] == e, f"{form.__name__} {hex(p)}"
+    got = jx.contains(pdf, built, probe_col="probe").collect()
+    by_probe = {row["probe"]: row["contained"] for row in got}
+    for p, e in zip(probes, expected):
+        assert by_probe[p] == e, hex(p)
 
 
 def test_us915_northeast_subtree(spark, us915):
@@ -168,7 +163,7 @@ def test_monaco_compaction_and_promoted_get(spark, monaco):
         [(descendant_probe(int(c), 12), int(c)) for c in cells],
         "probe: long, leaf: long",
     )
-    got = jx.get_indexed(probes, built, probe_col="probe").cache()
+    got = jx.get_auto(probes, built, probe_col="probe").cache()
     assert got.count() == n_raw
     assert got.filter(F.col("stored_cell") != F.col("leaf")).count() == 0
     promoted = got.filter(cx.res("stored_cell") < 12).count()
@@ -210,7 +205,7 @@ def test_monaco_map_values_null_compactor(spark, monaco):
     vals = monaco.withColumn("value", F.monotonically_increasing_id())
     built = bx.build_region(vals, value_col="value", compactor="none").cache()
     assert built.count() == 825
-    got = jx.get_indexed(
+    got = jx.get_auto(
         vals.select(F.col("cell").alias("probe"), F.col("value").alias("expected")),
         built,
         probe_col="probe",
@@ -326,26 +321,94 @@ def test_subtree_agg(spark, monaco):
     assert sums.agg(F.sum("s")).collect()[0][0] == total_row
 
 
-def test_probe_indexed_arrow_equals_pandas(spark, monaco):
-    """mapInArrow and mapInPandas probe forms agree row-for-row,
-    including NULL and invalid probe cells (the Arrow null-mask path)."""
-    built = bx.build_region(monaco, compactor="set").cache()
-    cells = [int(r["cell"]) for r in monaco.limit(20).collect()]
-    probe_rows = (
-        [(i, c) for i, c in enumerate(cells)]
-        + [(100, None), (101, -7), (102, 0)]
-    )
-    probes = spark.createDataFrame(probe_rows, "id: long, cell: long")
-    a = {
-        (r["id"], r["stored_cell"])
-        for r in jx.probe_indexed(probes, built, form="arrow").collect()
-    }
-    b = {
-        (r["id"], r["stored_cell"])
-        for r in jx.probe_indexed(probes, built, form="pandas").collect()
-    }
-    assert a == b
-    assert (100, None) in a and (101, None) in a
+@pytest.fixture(scope="module")
+def lookup_maps(spark, us915):
+    """The two lookup regimes: US915 (8 levels, inner lookups take the
+    explode form) and ``ops.region_map`` (3 levels, chained joins)."""
+    from hexspark import ops
+
+    deep = bx.build_region(us915, compactor="set").cache()
+    shallow = ops.region_map(spark).cache()
+    assert len(jx.region_res_set(deep)) > jx.MAX_CHAINED_RES
+    assert len(jx.region_res_set(shallow)) <= jx.MAX_CHAINED_RES
+    return {"us915": deep, "region_map": shallow}
+
+
+def _with_bits(cell: int, mask: int, value: int) -> int:
+    """``cell`` with the bits under ``mask`` replaced by ``value``, as
+    a signed 64-bit long."""
+    v = (cell & ~mask & (2**64 - 1)) | value
+    return v - 2**64 if v >= 2**63 else v
+
+
+def _hostile_probes(cells: np.ndarray) -> list:
+    """For 12 stored leaves spread over the map: a res-15 descendant
+    (hit), the same descendant with the reserved bit set, mode 0 and 2,
+    base 122 and 127 (all invalid), and the leaf's parent (coarser than
+    its leaf: miss).  Plus one NULL probe."""
+    out = [None]
+    for c in cells[:: max(1, len(cells) // 12)][:12]:
+        d = descendant_probe(int(c), 15)
+        out.append(d)
+        out.append(_with_bits(d, 1 << 63, 1 << 63))
+        for m in (0, 2):
+            out.append(_with_bits(d, 0xF << K.MODE_OFFSET, m << K.MODE_OFFSET))
+        for b in (122, 127):
+            out.append(_with_bits(d, 0x7F << K.BASE_OFFSET, b << K.BASE_OFFSET))
+        r = int(cnp.res(np.array([c]))[0])
+        if r > 0:
+            out.append(int(cnp.to_parent(np.array([c]), r - 1)[0]))
+    return out
+
+
+@pytest.mark.parametrize("which", ["us915", "region_map"])
+def test_lookup_hostile_probes_match_naive(spark, lookup_maps, which):
+    """Invalid probes never match: with no validity mask in the join,
+    this rests on ``to_parent`` keeping the reserved, mode and base
+    bits.  Inner and left ``get_auto`` and ``contains`` all agree with
+    the naive linear-scan oracle."""
+    region = lookup_maps[which]
+    cells = np.array([r["cell"] for r in region.select("cell").collect()], dtype=np.int64)
+    probes = _hostile_probes(cells)
+    expected = {i: p is not None and naive_contains(cells, p) for i, p in enumerate(probes)}
+    assert 0 < sum(expected.values()) < len(probes)
+    pdf = spark.createDataFrame(list(enumerate(probes)), "id: long, cell: long")
+
+    contained = {r["id"]: r["contained"] for r in jx.contains(pdf, region).collect()}
+    assert contained == expected
+
+    left = {r["id"]: (r["cell"], r["stored_cell"])
+            for r in jx.get_auto(pdf, region, how="left").collect()}
+    assert set(left) == set(expected)
+    for i, (probe, stored) in left.items():
+        assert (stored is not None) == expected[i], hex(probe or 0)
+        if stored is not None:  # the stored leaf is an ancestor-or-self
+            r = int(cnp.res(np.array([stored]))[0])
+            assert int(cnp.to_parent(np.array([probe]), r)[0]) == stored
+
+    inner = {r["id"]: r["stored_cell"] for r in jx.get_auto(pdf, region).collect()}
+    assert inner == {i: left[i][1] for i, hit in expected.items() if hit}
+
+
+_PYTHON_NODES = ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+
+
+@pytest.mark.parametrize("which", ["us915", "region_map"])
+def test_lookup_plans_have_no_python_node(spark, lookup_maps, which):
+    """Every lookup form runs in the JVM: the executed plans of inner
+    and left ``get_auto`` and of ``contains`` carry no Python UDF node."""
+    region = lookup_maps[which]
+    probes = region.select("cell")
+    for name, df in [
+        ("inner", jx.get_auto(probes, region)),
+        ("left", jx.get_auto(probes, region, how="left")),
+        ("contains", jx.contains(probes, region)),
+    ]:
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan, plan
+        for node in _PYTHON_NODES:
+            assert node not in plan, f"{which} {name}: {node}\n{plan}"
 
 
 def test_tile_stats_approx_tracks_exact(spark):

@@ -189,21 +189,3 @@ def test_numpy_twins_match_spark(spark):
         assert row["par"] == (None if expected == -1 else expected) or (
             row["par"] == expected
         )
-
-
-def test_sorted_cell_index_probe():
-    # stored: a res-5 cell and a res-6 cell under a different base
-    a = cnp.make_cell(np.array([20]), np.array([5]),
-                      np.array([(0 << 42) | (6 << 39) | (4 << 36) | (3 << 33) | (4 << 30) | ((1 << 30) - 1)]))[0]
-    b = cnp.make_cell(np.array([21]), np.array([0]), np.array([K.ALL_DIGIT_BITS]))[0]
-    idx = cnp.SortedCellIndex(np.array([a, b]))
-    # probe: res-7 descendant of a (append digits 0,0)
-    child = (a & ~np.int64(K.RES_MASK)) | np.int64(7 << K.RES_OFFSET)
-    child &= ~((np.int64(1) << ((15 - 5) * 3)) - 1)  # clear fills
-    child |= (np.int64(1) << ((15 - 7) * 3)) - 1  # refill below res 7
-    probes = np.array([child, a, cnp.to_parent(np.array([a]), 2)[0], b], dtype=np.int64)
-    covered, sidx = idx.probe(probes)
-    assert covered.tolist() == [True, True, False, True]
-    assert idx.cells[sidx[0]] == a  # ancestor hit returns stored cell
-    assert idx.cells[sidx[1]] == a
-    assert idx.cells[sidx[3]] == b

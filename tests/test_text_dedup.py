@@ -603,8 +603,9 @@ def test_pii_counts_and_redact(spark):
             (1, "mail bob.smith+x@sub.example.co.uk and ip 192.168.1.5 ok"),
             (2, "call +44-555-0142 or +1-555-9999 today"),
             (3, "clean text with version 1.2 and price $3.50"),
+            (4, None),
         ],
-        ["id", "text"],
+        "id long, text string",
     )
     ne, ni, nph = pii_counts(F.col("text"))
     out = {
@@ -621,6 +622,8 @@ def test_pii_counts_and_redact(spark):
     # version/price strings are NOT PII; text passes through unchanged
     assert out[3][:3] == (0, 0, 0)
     assert out[3][3] == "clean text with version 1.2 and price $3.50"
+    # NULL text in, NULL counts and NULL redaction out
+    assert out[4] == (None, None, None, None)
 
 
 def test_repetition_stats_hand_computed(spark):
